@@ -1,13 +1,16 @@
 package graft.ml.feature
 
-import breeze.linalg.{DenseMatrix => BDM}
+import dev.ludovic.netlib.blas.BLAS
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.attribute.AttributeGroup
 import org.apache.spark.ml.linalg.{DenseMatrix, DenseVector, SQLDataTypes, Vector}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.{Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{JoinedRow, UnsafeArrayData}
 import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.graftshim.StreamingShim
 import org.apache.spark.sql.types.{ArrayType, DoubleType, Metadata, StructField, StructType}
 
 import graft.ml.{Cov, Eigen}
@@ -26,7 +29,9 @@ import graft.ml.{Cov, Eigen}
   *  - eigenvector signs are canonical (largest-|entry| positive,
   *    reference: rapidsml_jni.cu:37-64), so results are reproducible;
   *  - `array<numeric>` input columns are accepted alongside `VectorUDT`
-  *    (the fixture embeddings are `array<float>`).
+  *    (the fixture embeddings are `array<float>`);
+  *  - the feature width comes from the Gram pass itself, not from a
+  *    separate `first()` probe job (reference: RapidsPCA.scala:117).
   */
 trait GraftPCAParams extends Params {
   final val k = new IntParam(this, "k", "number of principal components (> 0)",
@@ -97,21 +102,24 @@ class GraftPCA(override val uid: String) extends Estimator[GraftPCAModel]
     * reference documents as unsupported. */
   override def fit(dataset: Dataset[_]): GraftPCAModel = {
     transformSchema(dataset.schema, logging = true)
-    val rows = Cov.vectorRdd(dataset.toDF(), $(inputCol))
-    // ONE width probe routes exact-vs-sketch; the n-aware stats
-    // overload reuses it, so neither route pays a second first() job
-    val n = rows.first().size
-    require($(k) <= n, s"k=${$(k)} must be <= numFeatures=$n")
+    val df = dataset.toDF()
+    // the Gram pass reports the width itself, so the exact route is one
+    // Spark job; a width past MaxCols comes back after one row per
+    // partition and routes to the sketch
+    val p = Cov.pass(df, $(inputCol), $(useGemm))
+    require(p.n > 0, "empty input")
+    require($(k) <= p.n, s"k=${$(k)} must be <= numFeatures=${p.n}")
     val res =
-      if (n > Cov.MaxCols) {
+      if (p.n > Cov.MaxCols) {
         // the sketch makes powerIters+2 passes: cache the extracted
         // vectors so each pass rereads storage instead of re-running
         // the upstream query's whole lineage
+        val rows = Cov.vectorRdd(df, $(inputCol))
         rows.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try graft.ml.Rsvd.pca(rows, n, $(k), $(meanCentering))
+        try graft.ml.Rsvd.pca(rows, p.n, $(k), $(meanCentering))
         finally { rows.unpersist(blocking = false); () }
       } else {
-        val stats = Cov.stats(rows, n, $(useGemm))
+        val stats = Cov.stats(p, $(useGemm))
         val matrix =
           if ($(meanCentering)) stats.covariance else stats.gramNormalized
         Eigen.pca(matrix, $(k))
@@ -234,18 +242,19 @@ class GraftPCAModel(override val uid: String, val pc: DenseMatrix,
     * ONLY closure state (reference: RapidsPCA.scala:187). */
   private def transformGemv(dataset: Dataset[_]): DataFrame = {
     val pcT = pc.transpose
-    dataset.schema($(inputCol)).dataType match {
+    val meta = validateAndTransformSchema(dataset.schema).last.metadata
+    val projected = dataset.schema($(inputCol)).dataType match {
       case t if t == SQLDataTypes.VectorType =>
         val f = udf { v: Vector => pcT.multiply(v) }
-        dataset.withColumn($(outputCol), f(col($(inputCol))))
+        f(col($(inputCol)))
       case _: ArrayType =>
         val f = udf { arr: Seq[Double] =>
           pcT.multiply(new DenseVector(arr.toArray)).values.toSeq
         }
-        dataset.withColumn($(outputCol),
-          f(col($(inputCol)).cast("array<double>")))
+        f(col($(inputCol)).cast("array<double>"))
       case other => throw new IllegalArgumentException(s"bad input type $other")
     }
+    dataset.select(col("*"), projected.as($(outputCol), meta))
   }
 
   /** Rows per GEMM block: ~1M buffered doubles (8 MB), capped at 4096
@@ -259,49 +268,49 @@ class GraftPCAModel(override val uid: String, val pc: DenseMatrix,
     * n×k component matrix, instead of one gemv per row. Same
     * float→double widening and multiply-accumulate per element as
     * [[transformGemv]], so outputs agree to machine precision (PCASpec
-    * asserts 1e-12 on the fixture embeddings). */
+    * asserts 1e-12 on the fixture embeddings).
+    *
+    * Runs over the plan's Catalyst rows: each input row passes through
+    * unchanged, joined with its projected k-vector, with no Row or
+    * Vector objects in between. */
   private def transformGemm(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
     val n = pc.numRows
     val kk = pc.numCols
-    // Spark ML and Breeze matrices are both column-major: wrap, no copy
-    val pcB = new BDM[Double](n, kk, pc.values)
+    val pcValues = pc.toArray // column-major n×k
     val isVec = df.schema($(inputCol)).dataType == SQLDataTypes.VectorType
-    val outSchema = validateAndTransformSchema(df.schema)
+    val outField = validateAndTransformSchema(df.schema).last
     val block = gemmBlockRows(n)
     // pre-cast array input to double in the plan, so the buffered rows
     // carry doubles instead of unboxing arbitrary numerics per element
+    val tmp = "__graft_in"
     val prepped =
       if (isVec) df
-      else df.withColumn("__graft_in", col($(inputCol)).cast("array<double>"))
-    val inIdx = if (isVec) df.schema.fieldIndex($(inputCol))
-                else prepped.schema.length - 1
-    val nOrig = df.schema.length
-    val rdd = prepped.rdd.mapPartitions { it =>
-      it.grouped(block).flatMap { rows =>
+      else df.withColumn(tmp, col($(inputCol)).cast("array<double>"))
+    val reader = Cov.RowReader($(inputCol),
+      prepped.schema.fieldIndex(if (isVec) $(inputCol) else tmp), isVec)
+    val rdd = prepped.queryExecution.toRdd.mapPartitions { it =>
+      // the scan reuses its row objects: copy the ones held for a block
+      it.map(_.copy()).grouped(block).flatMap { rows =>
         val m = rows.size
-        val a = new BDM[Double](m, n)
+        // m rows row-major = the block transposed, n×m column-major
+        val a = new Array[Double](m * n)
         var i = 0
-        rows.foreach { r =>
-          if (isVec) {
-            val v = r.getAs[Vector](inIdx)
-            var j = 0; while (j < n) { a(i, j) = v(j); j += 1 }
-          } else {
-            val s = r.getSeq[Double](inIdx)
-            var j = 0; while (j < n) { a(i, j) = s(j); j += 1 }
-          }
-          i += 1
-        }
-        val p = a * pcB // m×k in one dgemm
+        rows.foreach { r => reader.read(r, n, a, i * n, null); i += 1 }
+        // pcᵀ·aᵀ: k×m column-major, i.e. each row's k outputs contiguous
+        val p = new Array[Double](m * kk)
+        BLAS.getInstance().dgemm("T", "N", kk, m, n, 1.0, pcValues, n, a, n, 0.0, p, kk)
         rows.iterator.zipWithIndex.map { case (r, ri) =>
-          val out: Any =
-            if (isVec) new DenseVector(Array.tabulate(kk)(c => p(ri, c)))
-            else Array.tabulate(kk)(c => p(ri, c)).toSeq
-          Row.fromSeq(r.toSeq.take(nOrig) :+ out)
+          val out = java.util.Arrays.copyOfRange(p, ri * kk, (ri + 1) * kk)
+          val value: Any =
+            if (isVec) Cov.VectorUdt.serialize(new DenseVector(out))
+            else UnsafeArrayData.fromPrimitiveArray(out)
+          new JoinedRow(r, InternalRow(value)): InternalRow
         }
       }
     }
-    spark.createDataFrame(rdd, outSchema)
+    val projected = StreamingShim.fromInternalRows(df.sparkSession, rdd,
+      StructType(prepped.schema.fields :+ outField), isStreaming = false)
+    if (isVec) projected else projected.drop(tmp)
   }
 
   override def transformSchema(schema: StructType): StructType =

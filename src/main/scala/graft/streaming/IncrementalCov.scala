@@ -28,13 +28,13 @@ final class IncrementalCov(inputCol: String) extends Serializable {
 
   private var acc: Cov.Partial = _
 
-  /** Fold one micro-batch into the running state. Empty batches are
-    * no-ops (streams deliver them on watermark-only triggers). */
+  /** Fold one micro-batch into the running state: one Gram pass, which
+    * also reports the batch's width. Empty batches are no-ops (streams
+    * deliver them on watermark-only triggers). */
   def update(batch: DataFrame): Unit = {
-    val rows = Cov.vectorRdd(batch, inputCol)
-    if (!rows.isEmpty()) {
-      val n = rows.first().size
-      val p = Cov.meanAndGramGemm(rows, n)
+    val p = Cov.pass(batch, inputCol, useGemm = true)
+    if (p.n > 0) {
+      require(p.n <= Cov.MaxCols, s"feature width ${p.n} outside (0, ${Cov.MaxCols}]")
       synchronized { acc = if (acc == null) p else acc.merge(p) }
     }
   }

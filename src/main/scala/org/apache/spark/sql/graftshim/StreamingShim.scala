@@ -1,7 +1,10 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic.SparkSession
+import org.apache.spark.sql.types.StructType
 
 /** The one `private[sql]` door a V1 streaming source needs: a
   * micro-batch `getBatch` must return a DataFrame whose logical plan
@@ -12,16 +15,23 @@ import org.apache.spark.sql.classic.SparkSession
   * shim (the alternative, a full DataSource V2 `MicroBatchStream`,
   * would mean re-implementing the parquet `PartitionReader` stack the
   * batch reader already provides). Kept to the single call — no other
-  * internals are touched. */
+  * internals are touched. The same call with `isStreaming = false`
+  * builds a batch frame from Catalyst rows, which lets a row-wise
+  * transform (GraftPCAModel's blocked projection) skip the conversion
+  * to and from external `Row`s. */
 object StreamingShim {
+
+  /** A DataFrame over `rows`, which must match `schema`. */
+  def fromInternalRows(spark: org.apache.spark.sql.SparkSession,
+      rows: RDD[InternalRow], schema: StructType,
+      isStreaming: Boolean): DataFrame =
+    spark.asInstanceOf[SparkSession].internalCreateDataFrame(rows, schema, isStreaming)
 
   /** Re-root `df`'s physical RDD under a streaming-flagged LogicalRDD
     * so MicroBatchExecution accepts it as a source batch. */
-  def asStreamingBatch(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession.asInstanceOf[SparkSession]
-    spark.internalCreateDataFrame(
-      df.queryExecution.toRdd, df.schema, isStreaming = true)
-  }
+  def asStreamingBatch(df: DataFrame): DataFrame =
+    fromInternalRows(df.sparkSession, df.queryExecution.toRdd, df.schema,
+      isStreaming = true)
 
   /** Drop a local-checkpointed frame's RDD blocks NOW. Iterative
     * drivers that re-checkpoint per round (BPE merges, fixed-point

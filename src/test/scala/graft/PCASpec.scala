@@ -434,6 +434,132 @@ class PCASpec extends AnyFunSuite {
     assert(first.size == 3)
   }
 
+  /** Spark jobs that `body` runs from this thread, counted by job group
+    * so jobs of other threads cannot leak in. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"pcaspec-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group) seen.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "PCASpec job count")
+    try body
+    finally {
+      sc.clearJobGroup()
+      org.apache.spark.TestBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    seen.get()
+  }
+
+  /** Messages along a failure's cause chain. */
+  private def messages(t: Throwable): Seq[String] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(e => s"${e.getClass.getName}: ${e.getMessage}").toSeq
+
+  private val vecSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("f",
+      org.apache.spark.ml.linalg.SQLDataTypes.VectorType)))
+
+  private def vecFrame(rows: Seq[Vector], parts: Int) =
+    spark.createDataFrame(spark.sparkContext.parallelize(
+      rows.map(org.apache.spark.sql.Row(_)), parts), vecSchema)
+
+  test("a narrow fit runs one Spark job, a GEMM transform one") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-pca-jobs").toString
+    val rng = new scala.util.Random(5)
+    Seq.fill(400)(Vectors.dense(Array.fill(32)(rng.nextGaussian())): Vector)
+      .map(Tuple1(_)).toDF("f").repartition(4)
+      .write.mode("overwrite").parquet(dir)
+    val in = spark.read.parquet(dir)
+    var model: GraftPCAModel = null
+    val fitJobs = jobsOf {
+      model = new GraftPCA().setK(4).setInputCol("f").setOutputCol("o").fit(in)
+    }
+    assert(fitJobs == 1, s"fit ran $fitJobs jobs")
+    val transformJobs = jobsOf {
+      model.setUseGemm(true).transform(in)
+        .write.format("noop").mode("overwrite").save()
+    }
+    assert(transformJobs == 1, s"transform ran $transformJobs jobs")
+  }
+
+  test("GEMM transform passes input columns through bit for bit, with size-k metadata") {
+    import spark.implicits._
+    // raw bits, so -0.0 and 0.0 (equal under ==) stay distinguishable
+    def bits(x: Any): Any = x match {
+      case v: Vector =>
+        (v.getClass.getSimpleName, v.toArray.toSeq.map(java.lang.Double.doubleToRawLongBits))
+      case s: Seq[_] => s.map {
+        case f: Float => java.lang.Float.floatToRawIntBits(f)
+        case other => other
+      }
+      case other => other
+    }
+    def check(in: org.apache.spark.sql.DataFrame, k: Int): Unit = {
+      val model = new GraftPCA().setK(k).setInputCol("f").setOutputCol("o").fit(in)
+      for (gemm <- Seq(true, false)) {
+        val out = model.setUseGemm(gemm).transform(in)
+        assert(out.columns.toSeq == in.columns.toSeq :+ "o")
+        // read the ML attribute group directly: AttributeGroup's reader
+        // accepts VectorUDT fields only
+        assert(out.schema("o").metadata.getMetadata("ml_attr")
+          .getLong("num_attrs") == k, s"useGemm=$gemm")
+        val got = out.drop("o").collect().map(r => r.toSeq.map(bits)).sortBy(_.head.toString)
+        val exp = in.collect().map(r => r.toSeq.map(bits)).sortBy(_.head.toString)
+        assert(got.toSeq == exp.toSeq, s"useGemm=$gemm")
+      }
+    }
+    val vecIn = handData.zipWithIndex.map { case (v, i) => (i.toLong, s"row$i", v) }
+      .toDF("id", "tag", "f")
+    check(vecIn, 2)
+    val arrIn = handData.zipWithIndex
+      .map { case (v, i) => (i.toLong, v.toArray.map(x => if (x == 0.0) -0.0f else x.toFloat)) }
+      .toDF("id", "f")
+    check(arrIn, 2)
+  }
+
+  test("Gram pass: null rows, mixed widths, empty partitions and empty input") {
+    import spark.implicits._
+    def pca(k: Int) = new GraftPCA().setK(k).setInputCol("f").setOutputCol("o")
+    // a null row names its column, on either input type
+    val nullVec = vecFrame(Seq(Vectors.dense(1.0, 2.0), null, Vectors.dense(3.0, 5.0)), 1)
+    val nullArr = Seq(Some(Array(1.0, 2.0)), None, Some(Array(3.0, 4.0))).toDF("f")
+    for (df <- Seq(nullVec, nullArr)) {
+      val e = intercept[org.apache.spark.SparkException](pca(1).fit(df))
+      assert(messages(e).exists(m => m.startsWith("java.lang.IllegalArgumentException") &&
+        m.contains("'f'")), messages(e).mkString("\n"))
+    }
+    // widths that differ across partitions, and within one
+    val across = vecFrame(Seq(Vectors.dense(1.0, 2.0), Vectors.dense(1.0, 2.0, 3.0)), 2)
+    val within = vecFrame(Seq(Vectors.dense(1.0, 2.0), Vectors.dense(1.0, 2.0, 3.0)), 1)
+    for (df <- Seq(across, within)) {
+      val e = intercept[Exception](pca(1).fit(df))
+      assert(messages(e).exists(_.contains("uniform width required")),
+        messages(e).mkString("\n"))
+    }
+    // 3 rows over 8 partitions, five of them empty, fit as in one
+    val spread = pca(2).fit(vecFrame(handData, 8))
+    val single = pca(2).fit(vecFrame(handData, 1))
+    spread.pc.values.zip(single.pc.values).foreach { case (x, y) =>
+      assert(math.abs(x - y) < 1e-12, s"$x vs $y") }
+    spread.explainedVariance.values.zip(single.explainedVariance.values)
+      .foreach { case (x, y) => assert(math.abs(x - y) < 1e-12, s"$x vs $y") }
+    // no rows at all: filtered away, or no partitions
+    val noRows = vecFrame(handData, 2).filter(org.apache.spark.sql.functions.lit(false))
+    val noParts = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], vecSchema)
+    for (df <- Seq(noRows, noParts)) {
+      val e = intercept[IllegalArgumentException](pca(1).fit(df))
+      assert(e.getMessage.contains("empty input"), e.getMessage)
+    }
+  }
+
   test("fitted components are orthonormal on fixture embeddings") {
     val emb = graft.sources.Tables.embeddings(spark, sf)
     val model = new GraftPCA().setK(4).setInputCol("embedding")
