@@ -4,7 +4,7 @@ import breeze.linalg.{DenseMatrix => BDM, DenseVector => BDV}
 import dev.ludovic.netlib.blas.BLAS
 import org.apache.spark.ml.linalg.{SQLDataTypes, Vector, Vectors}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions.col
@@ -20,7 +20,10 @@ import org.apache.spark.sql.types.{ArrayType, UserDefinedType}
   * and calls cublasDgemm (RapidsRowMatrix.scala:168-200); ours reads the
   * Catalyst values of each row straight into a row-major block buffer
   * and folds it into the Gram matrix with one netlib dgemm per block —
-  * same blocking idea, JVM BLAS instead of a device kernel.
+  * same blocking idea, JVM BLAS instead of a device kernel. The
+  * reference's `useGemm` flag picks between that and a per-row SPR
+  * kernel (RapidsRowMatrix.scala:203-234); here dense and sparse rows
+  * alike go through the blocked dgemm, and the flag is inert.
   *
   * Unlike the reference, which probes the width with a separate
   * `first()` job (RapidsPCA.scala:117), the pass discovers it: each
@@ -42,6 +45,12 @@ object Cov {
   /** Rows per GEMM block inside a partition — bounds executor memory at
     * blockRows·n doubles regardless of partition size. */
   val blockRows = 4096
+
+  /** Rows per block at width `n`: [[blockRows]], fewer past 512 columns
+    * so a block buffer stays within ~16 MiB. Shared by the Gram pass and
+    * the model's projection. */
+  private[ml] def blockSize(n: Int): Int =
+    math.max(1, math.min(blockRows, (16 << 20) / 8 / n))
 
   private[ml] val VectorUdt = SQLDataTypes.VectorType.asInstanceOf[UserDefinedType[Vector]]
 
@@ -84,28 +93,20 @@ object Cov {
 
     /** Copies the row's vector, which must have width `n`, into
       * `buf(off until off + n)`; a sparse vector's inactive entries are
-      * zeroed. Returns -1 for a dense row, else the active-entry count,
-      * whose positions go to `active` unless it is null. */
-    def read(row: InternalRow, n: Int, buf: Array[Double], off: Int,
-        active: Array[Int]): Int = {
+      * zeroed. */
+    def read(row: InternalRow, n: Int, buf: Array[Double], off: Int): Unit = {
       checkNotNull(row)
-      if (!isVec) { copyDense(row.getArray(ordinal), n, buf, off); -1 }
+      if (!isVec) copyDense(row.getArray(ordinal), n, buf, off)
       else {
         val v = row.getStruct(ordinal, 4)
-        if (v.getByte(0) == 1) { copyDense(v.getArray(3), n, buf, off); -1 }
+        if (v.getByte(0) == 1) copyDense(v.getArray(3), n, buf, off)
         else {
           checkWidth(v.getInt(1), n)
           val idx = v.getArray(2); val vals = v.getArray(3)
           java.util.Arrays.fill(buf, off, off + n, 0.0)
           val nnz = idx.numElements()
           var jj = 0
-          while (jj < nnz) {
-            val j = idx.getInt(jj)
-            buf(off + j) = vals.getDouble(jj)
-            if (active != null) active(jj) = j
-            jj += 1
-          }
-          nnz
+          while (jj < nnz) { buf(off + idx.getInt(jj)) = vals.getDouble(jj); jj += 1 }
         }
       }
     }
@@ -120,21 +121,15 @@ object Cov {
       require(w == n, s"row width $w != $n (uniform width required)")
   }
 
-  /** Per-partition state of the pass for width `n`. Blocked-GEMM path
-    * (the reference's default, RapidsRowMatrix.scala:168-200): rows
-    * buffer into a row-major block — which is Bᵀ, n×r column-major — and
-    * each full block adds Bᵀ·B to the Gram matrix with one dgemm read in
-    * place (lda = n, beta = 1). Per-row path (the reference's SPR path,
-    * RapidsRowMatrix.scala:203-234): scalar upper-triangle updates over
-    * the row's nonzero (or, sparse, active) entries, mirrored at
-    * finalize time. */
-  private final class Acc(n: Int, useGemm: Boolean) {
+  /** Per-partition state of the pass for width `n`, the reference's
+    * blocked-GEMM path (RapidsRowMatrix.scala:168-200): rows buffer into
+    * a row-major block — which is Bᵀ, n×r column-major — and each full
+    * block adds Bᵀ·B to the Gram matrix with one dgemm read in place
+    * (lda = n, beta = 1). */
+  private final class Acc(n: Int) {
     require(n > 0, s"feature width $n outside (0, $MaxCols]")
-    // bound block buffer memory at ~16 MiB regardless of width
-    private val block =
-      if (useGemm) math.max(1, math.min(blockRows, (16 << 20) / 8 / n)) else 1
+    private val block = blockSize(n)
     private val buf = new Array[Double](block * n)
-    private val active = if (useGemm) null else new Array[Int](n)
     private val sum = new Array[Double](n)
     private val gram = new Array[Double](n * n)
     private var m = 0L
@@ -142,42 +137,17 @@ object Cov {
 
     def add(reader: RowReader, row: InternalRow): Unit = {
       val off = r * n
-      val nnz = reader.read(row, n, buf, off, active)
+      reader.read(row, n, buf, off)
       var i = 0
       while (i < n) { sum(i) += buf(off + i); i += 1 }
       m += 1
-      if (useGemm) { r += 1; if (r == block) flush() }
-      else if (nnz < 0) upperDense()
-      else upperSparse(nnz)
+      r += 1
+      if (r == block) flush()
     }
 
     private def flush(): Unit = if (r > 0) {
       BLAS.getInstance().dgemm("N", "T", n, n, r, 1.0, buf, n, buf, n, 1.0, gram, n)
       r = 0
-    }
-
-    private def upperDense(): Unit = {
-      var j = 0
-      while (j < n) {
-        val vj = buf(j)
-        if (vj != 0.0) {
-          val off = j * n
-          var i = 0
-          while (i <= j) { gram(off + i) += buf(i) * vj; i += 1 }
-        }
-        j += 1
-      }
-    }
-
-    private def upperSparse(nnz: Int): Unit = {
-      var jj = 0
-      while (jj < nnz) {
-        val j = active(jj); val vj = buf(j)
-        val off = j * n
-        var ii = 0
-        while (ii <= jj) { val i = active(ii); gram(off + i) += buf(i) * vj; ii += 1 }
-        jj += 1
-      }
     }
 
     def result: Partial = {
@@ -186,31 +156,43 @@ object Cov {
     }
   }
 
-  /** The pass over a VectorUDT or `array<numeric>` column (the fixture
-    * `embeddings.embedding` is `array<float>`; the reference API is
-    * VectorUDT — support both, cf. dense/sparse equivalence in
-    * PCASuite.scala:155-190): one Spark job over the plan's Catalyst
-    * rows, arrays cast to `array<double>` in the plan. `useGemm` selects
-    * blocked-GEMM (default, like the reference) vs per-row accumulation.
-    * A width past [[MaxCols]] comes back as a width-only partial, at the
-    * cost of one row per partition. */
-  def pass(df: DataFrame, inputCol: String, useGemm: Boolean): Partial = {
-    val isVec = df.schema(inputCol).dataType match {
-      case t if t == SQLDataTypes.VectorType => true
-      case _: ArrayType => false
+  /** How a feature column is decoded, for the pass, [[vectorRdd]] and
+    * the model's projection: a VectorUDT column is read as is, an
+    * `array<numeric>` column (the fixture `embeddings.embedding` is
+    * `array<float>`; the reference API is VectorUDT — support both, cf.
+    * dense/sparse equivalence in PCASuite.scala:155-190) is cast to
+    * `array<double>` in the plan. Returns the column to read and whether
+    * it is a VectorUDT. */
+  private def feature(df: DataFrame, inputCol: String): (Column, Boolean) =
+    df.schema(inputCol).dataType match {
+      case t if t == SQLDataTypes.VectorType => (col(inputCol), true)
+      case _: ArrayType => (col(inputCol).cast("array<double>"), false)
       case other => throw new IllegalArgumentException(
         s"input column '$inputCol' must be VectorUDT or array<numeric>, got $other")
     }
-    val c = if (isVec) col(inputCol) else col(inputCol).cast("array<double>")
-    pass(df.select(c).queryExecution.toRdd, RowReader(inputCol, 0, isVec), useGemm)
+
+  /** Name of the `array<double>` column [[decoded]] appends. */
+  private[ml] val DecodedCol = "__graft_in"
+
+  /** `df` with every column kept, plus — for `array<numeric>` input —
+    * the feature cast to `array<double>` in an appended [[DecodedCol]];
+    * and the reader of the feature in that frame's Catalyst rows. */
+  private[ml] def decoded(df: DataFrame, inputCol: String): (DataFrame, RowReader) = {
+    val (c, isVec) = feature(df, inputCol)
+    val plan = if (isVec) df else df.withColumn(DecodedCol, c)
+    (plan, RowReader(inputCol, plan.schema.fieldIndex(if (isVec) inputCol else DecodedCol), isVec))
   }
 
-  /** The pass over already extracted vectors. */
-  private def pass(rows: RDD[Vector], useGemm: Boolean): Partial =
-    pass(rows.map(v => InternalRow(VectorUdt.serialize(v))),
-      RowReader("vector", 0, isVec = true), useGemm)
+  /** The pass over a VectorUDT or `array<numeric>` column: one Spark job
+    * over the plan's Catalyst rows of that column alone. A width past
+    * [[MaxCols]] comes back as a width-only partial, at the cost of one
+    * row per partition. */
+  def pass(df: DataFrame, inputCol: String): Partial = {
+    val (c, isVec) = feature(df, inputCol)
+    pass(df.select(c).queryExecution.toRdd, RowReader(inputCol, 0, isVec))
+  }
 
-  private def pass(rows: RDD[InternalRow], reader: RowReader, useGemm: Boolean): Partial =
+  private def pass(rows: RDD[InternalRow], reader: RowReader): Partial =
     rows.mapPartitions { it =>
       if (!it.hasNext) Iterator.single(NoRows)
       else {
@@ -218,7 +200,7 @@ object Cov {
         val n = reader.width(first)
         if (n > MaxCols) Iterator.single(Partial(n, 0L, null, null))
         else {
-          val acc = new Acc(n, useGemm)
+          val acc = new Acc(n)
           acc.add(reader, first)
           while (it.hasNext) acc.add(reader, it.next())
           Iterator.single(acc.result)
@@ -230,36 +212,12 @@ object Cov {
     * `array<numeric>` column — the input of the multi-pass sketch
     * ([[Rsvd]]). */
   def vectorRdd(df: DataFrame, inputCol: String): RDD[Vector] = {
-    df.schema(inputCol).dataType match {
-      case _: ArrayType =>
-        df.select(col(inputCol).cast("array<double>")).rdd.map { r =>
-          val s = r.getSeq[Double](0)
-          if (s == null) throw new IllegalArgumentException(
-            s"null value in input column '$inputCol'")
-          Vectors.dense(s.toArray)
-        }
-      case _ =>
-        df.select(col(inputCol)).rdd.map { r =>
-          r.get(0) match {
-            case v: Vector => v
-            case other => throw new IllegalArgumentException(
-              s"input column '$inputCol' must be VectorUDT or array<numeric>, got $other")
-          }
-        }
+    val (c, isVec) = feature(df, inputCol)
+    df.select(c).rdd.map { r =>
+      if (r.isNullAt(0)) throw new IllegalArgumentException(
+        s"null value in input column '$inputCol'")
+      if (isVec) r.getAs[Vector](0) else Vectors.dense(r.getSeq[Double](0).toArray)
     }
-  }
-
-  /** Mirror the accumulated upper triangle into the lower (cf. the
-    * reference's `triuToFull`, RapidsRowMatrix.scala:260-288). */
-  private def symmetrize(gram: BDM[Double]): BDM[Double] = {
-    val n = gram.rows
-    var j = 0
-    while (j < n) {
-      var i = j + 1
-      while (i < n) { gram(i, j) = gram(j, i); i += 1 }
-      j += 1
-    }
-    gram
   }
 
   /** Result of the distributed pass. */
@@ -288,29 +246,23 @@ object Cov {
     }
   }
 
-  /** Finalize a pass: mean and second moment (the per-row path's
-    * upper triangle mirrored). */
-  def stats(p: Partial, useGemm: Boolean): Stats = {
+  /** Finalize a pass: count, mean and second moment. The result shares
+    * `p.gram`. */
+  def stats(p: Partial): Stats = {
     require(p.n > 0, "empty input")
     require(p.n <= MaxCols, s"feature width ${p.n} outside (0, $MaxCols]")
-    val moment = if (useGemm) p.gram else symmetrize(p.gram)
-    Stats(p.m, p.sum / p.m.toDouble, moment)
+    Stats(p.m, p.sum / p.m.toDouble, p.gram)
   }
 
-  def stats(rows: RDD[Vector], useGemm: Boolean = true): Stats =
-    stats(pass(rows, useGemm), useGemm)
+  def stats(df: DataFrame, inputCol: String): Stats = stats(pass(df, inputCol))
 
-  /** As above for a caller that already knows the width: every row is
-    * checked against `n`. */
+  /** The pass over already extracted vectors, for a caller that knows
+    * the width: every row is checked against `n`. `useGemm` is inert
+    * (compat: the pass is always blocked GEMM). */
   def stats(rows: RDD[Vector], n: Int, useGemm: Boolean): Stats = {
-    val p = pass(rows, useGemm)
+    val p = pass(rows.map(v => InternalRow(VectorUdt.serialize(v))),
+      RowReader("vector", 0, isVec = true))
     require(p.n == 0 || p.n == n, s"row width ${p.n} != $n (uniform width required)")
-    stats(p, useGemm)
+    stats(p)
   }
-
-  def stats(df: DataFrame, inputCol: String): Stats =
-    stats(df, inputCol, useGemm = true)
-
-  def stats(df: DataFrame, inputCol: String, useGemm: Boolean): Stats =
-    stats(pass(df, inputCol, useGemm), useGemm)
 }

@@ -3,13 +3,12 @@ package graft.ml.feature
 import dev.ludovic.netlib.blas.BLAS
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.attribute.AttributeGroup
-import org.apache.spark.ml.linalg.{DenseMatrix, DenseVector, SQLDataTypes, Vector}
+import org.apache.spark.ml.linalg.{DenseMatrix, DenseVector, SQLDataTypes}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util.{Identifiable, MLReadable, MLReader, MLWritable, MLWriter}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{JoinedRow, UnsafeArrayData}
-import org.apache.spark.sql.functions.{col, udf}
 import org.apache.spark.sql.graftshim.StreamingShim
 import org.apache.spark.sql.types.{ArrayType, DoubleType, Metadata, StructField, StructType}
 
@@ -19,9 +18,10 @@ import graft.ml.{Cov, Eigen}
   * `com.nvidia.spark.ml.feature.PCA` (reference: PCA.scala:27-37,
   * RapidsPCA.scala:30-210): same params (`k`, `inputCol`, `outputCol`,
   * `meanCentering`, plus the GPU algorithm-selection switches `useGemm`,
-  * `useCuSolverSVD`, `gpuId` kept as inert compatibility params), same
-  * fit/transform/persistence protocol, deterministic canonical-sign
-  * eigenvectors.
+  * `useCuSolverSVD`, `gpuId` kept as compat params: inert on JVM, still
+  * settable and persisted), same fit/transform/persistence protocol,
+  * deterministic canonical-sign eigenvectors. Fit and transform both
+  * run blocked GEMM, the reference's default path.
   *
   * Differences from stock Spark ML PCA, matching the reference:
   *  - `meanCentering=false` computes components of the uncentered second
@@ -41,8 +41,8 @@ trait GraftPCAParams extends Params {
   final val meanCentering = new BooleanParam(this, "meanCentering",
     "center columns before computing covariance (reference RapidsPCA.scala:36-45)")
   final val useGemm = new BooleanParam(this, "useGemm",
-    "blocked-GEMM (BLAS dgemm per row block, the reference default) vs " +
-      "per-row upper-triangle accumulation (reference RapidsPCA.scala:47-52)")
+    "compat: inert on JVM, fit and transform always run blocked GEMM " +
+      "(reference RapidsPCA.scala:47-52)")
   final val useCuSolverSVD = new BooleanParam(this, "useCuSolverSVD",
     "compat: inert on JVM (reference RapidsPCA.scala:54-59)")
   final val gpuId = new IntParam(this, "gpuId",
@@ -106,7 +106,7 @@ class GraftPCA(override val uid: String) extends Estimator[GraftPCAModel]
     // the Gram pass reports the width itself, so the exact route is one
     // Spark job; a width past MaxCols comes back after one row per
     // partition and routes to the sketch
-    val p = Cov.pass(df, $(inputCol), $(useGemm))
+    val p = Cov.pass(df, $(inputCol))
     require(p.n > 0, "empty input")
     require($(k) <= p.n, s"k=${$(k)} must be <= numFeatures=${p.n}")
     val res =
@@ -119,7 +119,7 @@ class GraftPCA(override val uid: String) extends Estimator[GraftPCAModel]
         try graft.ml.Rsvd.pca(rows, p.n, $(k), $(meanCentering))
         finally { rows.unpersist(blocking = false); () }
       } else {
-        val stats = Cov.stats(p, $(useGemm))
+        val stats = Cov.stats(p)
         val matrix =
           if ($(meanCentering)) stats.covariance else stats.gramNormalized
         Eigen.pca(matrix, $(k))
@@ -232,62 +232,24 @@ class GraftPCAModel(override val uid: String, val pc: DenseMatrix,
   def setOutputCol(value: String): this.type = set(outputCol, value)
   def setUseGemm(value: Boolean): this.type = set(useGemm, value)
 
-  override def transform(dataset: Dataset[_]): DataFrame = {
-    transformSchema(dataset.schema, logging = true)
-    if ($(useGemm)) transformGemm(dataset.toDF()) else transformGemv(dataset)
-  }
-
-  /** Per-row projection: one BLAS gemv per row, sparse-aware; the
-    * transposed component matrix is precomputed on the driver and is the
-    * ONLY closure state (reference: RapidsPCA.scala:187). */
-  private def transformGemv(dataset: Dataset[_]): DataFrame = {
-    val pcT = pc.transpose
-    val meta = validateAndTransformSchema(dataset.schema).last.metadata
-    val projected = dataset.schema($(inputCol)).dataType match {
-      case t if t == SQLDataTypes.VectorType =>
-        val f = udf { v: Vector => pcT.multiply(v) }
-        f(col($(inputCol)))
-      case _: ArrayType =>
-        val f = udf { arr: Seq[Double] =>
-          pcT.multiply(new DenseVector(arr.toArray)).values.toSeq
-        }
-        f(col($(inputCol)).cast("array<double>"))
-      case other => throw new IllegalArgumentException(s"bad input type $other")
-    }
-    dataset.select(col("*"), projected.as($(outputCol), meta))
-  }
-
-  /** Rows per GEMM block: ~1M buffered doubles (8 MB), capped at 4096
-    * rows so a block always fits beside the shuffle buffers. */
-  private def gemmBlockRows(n: Int): Int =
-    math.max(16, math.min(4096, (1 << 20) / math.max(1, n)))
-
   /** Partition-batched GEMM projection — the blocked transform the
     * reference carries as a disabled variant (RapidsPCA.scala:172-185):
     * buffer rows into an m×n block, ONE BLAS dgemm per block against the
-    * n×k component matrix, instead of one gemv per row. Same
-    * float→double widening and multiply-accumulate per element as
-    * [[transformGemv]], so outputs agree to machine precision (PCASpec
-    * asserts 1e-12 on the fixture embeddings).
+    * n×k component matrix (PCASpec checks it against a per-row
+    * `pcᵀ·v` replay at 1e-12).
     *
     * Runs over the plan's Catalyst rows: each input row passes through
     * unchanged, joined with its projected k-vector, with no Row or
     * Vector objects in between. */
-  private def transformGemm(df: DataFrame): DataFrame = {
+  override def transform(dataset: Dataset[_]): DataFrame = {
+    val df = dataset.toDF()
+    val outField = transformSchema(df.schema, logging = true).last
     val n = pc.numRows
     val kk = pc.numCols
     val pcValues = pc.toArray // column-major n×k
-    val isVec = df.schema($(inputCol)).dataType == SQLDataTypes.VectorType
-    val outField = validateAndTransformSchema(df.schema).last
-    val block = gemmBlockRows(n)
-    // pre-cast array input to double in the plan, so the buffered rows
-    // carry doubles instead of unboxing arbitrary numerics per element
-    val tmp = "__graft_in"
-    val prepped =
-      if (isVec) df
-      else df.withColumn(tmp, col($(inputCol)).cast("array<double>"))
-    val reader = Cov.RowReader($(inputCol),
-      prepped.schema.fieldIndex(if (isVec) $(inputCol) else tmp), isVec)
+    val block = Cov.blockSize(n)
+    val (prepped, reader) = Cov.decoded(df, $(inputCol))
+    val isVec = reader.isVec
     val rdd = prepped.queryExecution.toRdd.mapPartitions { it =>
       // the scan reuses its row objects: copy the ones held for a block
       it.map(_.copy()).grouped(block).flatMap { rows =>
@@ -295,7 +257,7 @@ class GraftPCAModel(override val uid: String, val pc: DenseMatrix,
         // m rows row-major = the block transposed, n×m column-major
         val a = new Array[Double](m * n)
         var i = 0
-        rows.foreach { r => reader.read(r, n, a, i * n, null); i += 1 }
+        rows.foreach { r => reader.read(r, n, a, i * n); i += 1 }
         // pcᵀ·aᵀ: k×m column-major, i.e. each row's k outputs contiguous
         val p = new Array[Double](m * kk)
         BLAS.getInstance().dgemm("T", "N", kk, m, n, 1.0, pcValues, n, a, n, 0.0, p, kk)
@@ -310,7 +272,7 @@ class GraftPCAModel(override val uid: String, val pc: DenseMatrix,
     }
     val projected = StreamingShim.fromInternalRows(df.sparkSession, rdd,
       StructType(prepped.schema.fields :+ outField), isStreaming = false)
-    if (isVec) projected else projected.drop(tmp)
+    if (isVec) projected else projected.drop(Cov.DecodedCol)
   }
 
   override def transformSchema(schema: StructType): StructType =

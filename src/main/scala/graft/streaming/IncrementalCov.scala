@@ -6,7 +6,7 @@ import graft.ml.Cov
 
 /** Incremental covariance state over a stream of feature batches — the
   * streaming face of the reference's distributed covariance pass
-  * (/root/reference/src/main/scala/org/apache/spark/ml/linalg/distributed/RapidsRowMatrix.scala:149-257).
+  * (reference: RapidsRowMatrix.scala:149-257).
   *
   * The per-batch result is the same mergeable `(m, Σv, Σv·vᵀ)` partial
   * the batch aggregation tree reduces, so folding micro-batches is
@@ -32,7 +32,7 @@ final class IncrementalCov(inputCol: String) extends Serializable {
     * also reports the batch's width. Empty batches are no-ops (streams
     * deliver them on watermark-only triggers). */
   def update(batch: DataFrame): Unit = {
-    val p = Cov.pass(batch, inputCol, useGemm = true)
+    val p = Cov.pass(batch, inputCol)
     if (p.n > 0) {
       require(p.n <= Cov.MaxCols, s"feature width ${p.n} outside (0, ${Cov.MaxCols}]")
       synchronized { acc = if (acc == null) p else acc.merge(p) }
@@ -42,9 +42,11 @@ final class IncrementalCov(inputCol: String) extends Serializable {
   def rowCount: Long = synchronized { if (acc == null) 0L else acc.m }
 
   /** Current statistics; same accessor surface as the batch
-    * [[Cov.stats]] result (covariance, gramNormalized, mean, m). */
+    * [[Cov.stats]] result (covariance, gramNormalized, mean, m). A
+    * snapshot: later updates merge into the running state in place, so
+    * it is finalized from a copy. */
   def stats: Cov.Stats = synchronized {
     require(acc != null && acc.m > 0, "no rows accumulated yet")
-    Cov.Stats(acc.m, acc.sum / acc.m.toDouble, acc.gram)
+    Cov.stats(acc.copy(sum = acc.sum.copy, gram = acc.gram.copy))
   }
 }

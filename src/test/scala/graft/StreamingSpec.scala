@@ -874,6 +874,19 @@ class StreamingSpec extends AnyFunSuite {
     assert(maxDiff <= 1e-12, s"covariance diverged by $maxDiff")
   }
 
+  test("incremental covariance snapshots stay fixed across later updates") {
+    import spark.implicits._
+    val inc = new graft.streaming.IncrementalCov("f")
+    inc.update(Seq(Array(1.0, 2.0), Array(3.0, 5.0), Array(4.0, 4.0)).toDF("f"))
+    val first = inc.stats
+    val (moment, cov) = (first.secondMoment.copy, first.covariance)
+    inc.update(Seq(Array(10.0, -7.0), Array(0.5, 9.0)).toDF("f"))
+    assert(inc.rowCount == 5 && inc.stats.m == 5)
+    assert(first.m == 3)
+    assert(first.secondMoment.toArray.sameElements(moment.toArray), "snapshot moment moved")
+    assert(first.covariance.toArray.sameElements(cov.toArray), "snapshot covariance moved")
+  }
+
   test("streaming trending top-k equals the batch twin once windows seal") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
